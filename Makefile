@@ -42,6 +42,7 @@ correctness-sf01:
 
 test:
 	python -m pytest tests/ -x -q
+	python -m pytest perfbench/tests -q
 
 correctness:
 	python tools/check_correctness.py /root/testdata/sf0.01

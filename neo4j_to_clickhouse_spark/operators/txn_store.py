@@ -1,18 +1,20 @@
 """Transaction-logged Parquet partition store: snapshot isolation, time
 travel, and optimistic concurrency WITHOUT external table-format jars.
 
-:class:`~neo4j_to_clickhouse_spark.operators.maintenance.LocalPartitionStore`
-documents its own gap honestly: the per-month rename swap leaves a brief
-reader-visible window where a month is absent, and readers that started
-before a swap can see a torn mix of old and new months. The reference
-never has this problem because MergeTree part replacement is atomic under
-a snapshot (`OPTIMIZE TABLE ... FINAL` swaps parts inside the engine —
-`initial-load/scripts/04-optimize-tables.sql:26-48`). The usual cluster
-answer is a transactional table format (Delta, Iceberg), but those need
-jars this environment cannot fetch — so this module implements the part
-of their design the maintenance jobs actually need, following the PUBLIC
-Delta Lake transaction-log protocol idea (an ordered log of add/remove
-file actions; readers resolve a snapshot, writers commit optimistically):
+This is the one storage protocol of every event table: batch loads
+(``sources.snapshot.write_events``), streaming micro-batches
+(``streaming.pipeline``), compaction and retention
+(``operators.maintenance``) all publish through the commit log below,
+and readers go through :func:`read_table` / :func:`snapshot`. The
+reference gets the same guarantee from MergeTree, whose part replacement
+is atomic under a snapshot (`OPTIMIZE TABLE ... FINAL` swaps parts inside
+the engine — `initial-load/scripts/04-optimize-tables.sql:26-48`). The
+usual cluster answer is a transactional table format (Delta, Iceberg),
+whose jars are not a dependency here — so this module implements the
+part of their design the maintenance jobs actually need, following the
+PUBLIC Delta Lake transaction-log protocol (Armbrust et al., VLDB 2020:
+an ordered log of add/remove file actions; readers resolve a snapshot,
+writers commit optimistically):
 
 - ``_txn_log/<version>.json`` files record ``add``/``remove`` actions
   over data files (paths relative to the table root). A version is
@@ -50,10 +52,9 @@ import os
 import shutil
 import uuid
 from pathlib import Path
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
-
-from neo4j_to_clickhouse_spark.operators.maintenance import PartitionStore
 
 LOG_DIR = "_txn_log"
 CHECKPOINT_EVERY = 10
@@ -62,6 +63,21 @@ CHECKPOINT_EVERY = 10
 class ConcurrentSwapError(RuntimeError):
     """Another writer replaced one of this swap's months first; re-run the
     maintenance job against the new snapshot."""
+
+
+def require_local_path(table_path: str) -> None:
+    """Refuse a URI (``s3a://``, ``hdfs://``, ``file:``). The log, the
+    staged renames and the file scans go through pathlib, which would
+    treat ``s3a://b/t`` as the relative directory ``./s3a:/b/t``: Spark
+    writes the data remotely while the log lands in a local directory
+    that never sees those files, so appended rows would be lost without
+    an error. Pass a plain local path instead."""
+    if urlparse(str(table_path)).scheme:
+        raise ValueError(
+            f"{table_path!r}: transaction-logged tables are local "
+            "filesystem only (the log and its renames use pathlib) — "
+            "pass a plain path, without a URI scheme"
+        )
 
 
 def _log_dir(table_path: str) -> Path:
@@ -150,6 +166,7 @@ def ensure_log(table_path: str) -> int:
     """Bootstrap the log for a plain partitioned Parquet table (version 0
     adds every existing data file); no-op when a log already exists.
     Returns the latest version."""
+    require_local_path(table_path)
     versions = _list_versions(table_path)
     if versions:
         return versions[-1]
@@ -274,13 +291,15 @@ def read_table(
     )
 
 
-class TxnLogPartitionStore(PartitionStore):
-    """Transactional :class:`PartitionStore` over plain Parquet + the
-    commit log above. Drop-in for ``compact``/``apply_retention``:
-    swaps and retention drops are atomic single-file commits, readers
+class TxnLogPartitionStore:
+    """Partition store over plain Parquet + the commit log above: the
+    month-partition swap of ``compact``, the month drop of
+    ``apply_retention`` and the micro-batch publish of the stream sink.
+    Swaps and retention drops are atomic single-file commits, readers
     pinned to a snapshot never see a gap, and a crash at ANY point
     leaves the table at the last committed version (orphaned staged
-    files are invisible until vacuum reclaims them)."""
+    files are invisible until vacuum reclaims them). Every method
+    adopts a table that has no log yet (:func:`ensure_log`)."""
 
     def read(self, spark: SparkSession, table_path: str) -> DataFrame:
         ensure_log(table_path)
@@ -288,7 +307,7 @@ class TxnLogPartitionStore(PartitionStore):
 
     def begin_rewrite(
         self, spark: SparkSession, table_path: str
-    ) -> tuple[DataFrame, object | None]:
+    ) -> tuple[DataFrame, tuple[int, list[str]]]:
         """Pinned read for a rewrite: the returned base token carries the
         resolved (version, files) so :meth:`replace_months` computes its
         remove-set against exactly what the rewrite read. Without the
@@ -301,7 +320,7 @@ class TxnLogPartitionStore(PartitionStore):
         version, files = snapshot(table_path)
         return read_table(spark, table_path, version), (version, files)
 
-    def live_files(self, table_path: str) -> list[str] | None:
+    def live_files(self, table_path: str) -> list[str]:
         ensure_log(table_path)
         return snapshot(table_path)[1]
 
@@ -310,8 +329,13 @@ class TxnLogPartitionStore(PartitionStore):
         table_path: str,
         staging_path: str,
         months: list[str],
-        base: object | None = None,
+        base: tuple[int, list[str]] | None = None,
     ) -> None:
+        """Swap the ``event_month=<m>`` partitions under ``staging_path``
+        into the table for every month in ``months``; a month with no
+        staged output (fully deduped away) is removed. ``base`` is the
+        ``(version, files)`` pin :meth:`begin_rewrite` returned for the
+        snapshot the staged output was computed from."""
         if not months:
             return  # nothing was read by the compaction: no commit to make
         # months must be the str form file paths use: an int 202602 (from
@@ -341,6 +365,7 @@ class TxnLogPartitionStore(PartitionStore):
             dropped = sorted({_month_of(f) for f in removes})
             if not removes:
                 return []
+            removed = set(removes)
             try:
                 self._commit(
                     table_path,
@@ -349,17 +374,11 @@ class TxnLogPartitionStore(PartitionStore):
                     months=dropped,
                     add=[],
                     remove=removes,
-                    live_after=[f for f in files if f not in set(removes)],
+                    live_after=[f for f in files if f not in removed],
                 )
                 return dropped
             except FileExistsError:
                 continue  # recompute against the new head and retry
-
-    def recover(self, table_path: str) -> list[str]:
-        """Transactional: nothing to finish or roll back. A crash before
-        the commit left only orphaned (unreferenced, invisible) staged
-        files; vacuum reclaims them."""
-        return []
 
     def commit_batch(
         self, table_path: str, adds: list[str], batch_tag: str
@@ -376,13 +395,13 @@ class TxnLogPartitionStore(PartitionStore):
         :class:`ConcurrentSwapError` — a concurrent compact of the same
         month conservatively loses instead (ITS removes went stale).
 
-        One documented corner survives (identically in the rename
-        protocol): if a compact runs BETWEEN a batch's crash and its
-        replay, the compacted generation absorbed the first attempt's
-        rows under store-chosen file names the replay's tag cannot
-        match, so the replayed events exist twice until the next
-        ``compact(keep='events')`` — the standard exact-duplicate
-        backstop (`streaming/pipeline.py` module docstring)."""
+        One documented corner survives: if a compact runs BETWEEN a
+        batch's crash and its replay, the compacted generation absorbed
+        the first attempt's rows under store-chosen file names the
+        replay's tag cannot match, so the replayed events exist twice
+        until the next ``compact(keep='events')`` — the standard
+        exact-duplicate backstop (`streaming/pipeline.py` module
+        docstring)."""
         ensure_log(table_path)
         while True:
             version, files = snapshot(table_path)
@@ -394,7 +413,8 @@ class TxnLogPartitionStore(PartitionStore):
             if not adds and not removes:
                 return
             months = sorted({_month_of(f) for f in [*adds, *removes]})
-            live_after = [f for f in files if f not in set(removes)] + adds
+            removed = set(removes)
+            live_after = [f for f in files if f not in removed] + adds
             try:
                 self._commit(
                     table_path,

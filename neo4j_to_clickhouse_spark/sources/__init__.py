@@ -5,7 +5,6 @@ from neo4j_to_clickhouse_spark.sources.envelopes import (  # noqa: F401
     read_envelope_file,
 )
 from neo4j_to_clickhouse_spark.sources.bucketed import (  # noqa: F401
-    read_table,
     write_bucketed_events,
 )
 from neo4j_to_clickhouse_spark.sources.snapshot import (  # noqa: F401

@@ -22,7 +22,7 @@ parquet write discards it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed_events(
@@ -52,7 +52,3 @@ def write_bucketed_events(
     if path:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

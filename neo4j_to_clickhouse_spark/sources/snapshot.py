@@ -10,6 +10,11 @@ come from ``uuid()`` (the loader's ``uuid.uuid4()``, `:111,188`).
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +23,13 @@ from neo4j_to_clickhouse_spark.functions.scalar import (
     load_metadata,
     normalize_labels,
     valid_json_or_empty,
+)
+from neo4j_to_clickhouse_spark.operators.txn_store import (
+    LOG_DIR,
+    TxnLogPartitionStore,
+    ensure_log,
+    require_local_path,
+    stage_batch_files,
 )
 from neo4j_to_clickhouse_spark.schemas import (
     SNAPSHOT_NODES_CSV_SCHEMA,
@@ -97,17 +109,39 @@ def load_relationship_snapshot(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def write_events(df: DataFrame, path: str, mode: str = "append") -> None:
+def write_events(df: DataFrame, path: str) -> None:
     """Sink: month-partitioned, time-sorted parquet — the analogue of
     MergeTree ``PARTITION BY toYYYYMM ORDER BY (event_timestamp, event_id)``
     (`clickhouse/init/01-init-tables.sql:17-19`). ``sortWithinPartitions``
     tightens parquet row-group min/max stats so time-range predicates skip
     row groups, standing in for the sparse primary index.
+
+    The table is transaction-logged
+    (:mod:`~neo4j_to_clickhouse_spark.operators.txn_store`); read it with
+    ``txn_store.read_table``. A write to a path with no log (the first
+    load of a table) lands in place and is adopted as version 0. An
+    append to a logged table is staged and published as ONE commit
+    through the stream sink's rename-and-commit path, so the new files
+    are visible to snapshot readers and safe from ``vacuum`` (which
+    reclaims every file the log does not reference). A path with a URI
+    scheme is refused up front: the log is local-filesystem only.
     """
-    (
-        df.repartition("event_month")
-        .sortWithinPartitions("event_timestamp", "event_id")
-        .write.mode(mode)
-        .partitionBy("event_month")
-        .parquet(path)
+    require_local_path(path)
+    sorted_df = df.repartition("event_month").sortWithinPartitions(
+        "event_timestamp", "event_id"
     )
+    if not (Path(path) / LOG_DIR).is_dir():
+        sorted_df.write.mode("append").partitionBy("event_month").parquet(path)
+        ensure_log(path)
+        return
+    staging = os.path.join(path, f".write-{uuid.uuid4().hex[:12]}")
+    try:
+        sorted_df.write.partitionBy("event_month").parquet(staging)
+        # a call-unique tag: commit_batch removes files carrying the tag,
+        # and no earlier write can carry this one
+        adds, tag = stage_batch_files(
+            path, staging, 0, query_name=f"append-{uuid.uuid4().hex[:12]}"
+        )
+        TxnLogPartitionStore().commit_batch(path, adds, tag)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)

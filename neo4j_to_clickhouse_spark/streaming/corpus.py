@@ -859,8 +859,7 @@ def start_corpus_stream(
 # default — its promote-then-crash replay must still find (and replace)
 # its own ``batch-*`` files by name.
 #
-# Swap protocol per half (the LocalPartitionStore marker/aside idiom,
-# operators/maintenance.py — adapted to flat files):
+# Swap protocol per half (a marker/aside rename swap over flat files):
 #
 #   1. write consolidated output to ``.compact_staging/``  (invisible)
 #   2. write marker ``.compact_swap`` (tmp + rename: atomic)

@@ -13,19 +13,19 @@ Design decisions, mapped to reference behavior:
 - **Exactly-once effect.** The reference is at-least-once (auto-commit
   consumer, `clickhouse/config/config.xml:13-14`) and defers dedup to
   `OPTIMIZE FINAL`. We checkpoint offsets AND make the sink write itself
-  idempotent: each micro-batch lands in a hidden staging dir, then moves
-  into the table under deterministic ``batch-<id>-<i>`` file names, with
-  any stale files of the same batch id removed first. A batch replayed
-  after a crash (the at-least-once window between data write and
-  checkpoint commit) therefore *replaces* its own partial output instead
-  of appending a duplicate — raw-table consumers see each event once
-  without needing ``dedup_exact_events`` (which remains as
-  defense-in-depth for upstream producer duplicates). This is the local-FS
-  realization; on a cluster the same protocol rides HDFS atomic rename, or
-  a transactional table format (Delta/Iceberg) replaces it wholesale.
-  ``StreamConfig(store=TxnLogPartitionStore())`` upgrades it in place:
-  each batch publishes as one atomic commit-log entry, closing the
-  rename protocol's partial-visibility window for concurrent readers.
+  idempotent: each micro-batch lands in a hidden staging dir, moves into
+  the table under batch-tagged file names, and publishes as ONE commit
+  to the table's transaction log
+  (:meth:`~neo4j_to_clickhouse_spark.operators.txn_store.TxnLogPartitionStore.commit_batch`)
+  that also removes any files an earlier attempt of the same batch
+  committed. A batch replayed after a crash (the at-least-once window
+  between data write and checkpoint commit) therefore *replaces* its own
+  output instead of appending a duplicate, and concurrent snapshot
+  readers never see a partially published batch — raw-table consumers
+  see each event once without needing ``dedup_exact_events`` (which
+  remains as defense-in-depth for upstream producer duplicates). The
+  quarantine sink is an append-only audit log, not a snapshot-read
+  table: it keeps the plain batch-tagged rename (:func:`_promote_staged`).
 - **Quarantine, not stall.** Poison messages blocked the reference's
   consumer until manual DETACH/ATTACH (`docs/ISSUES-AND-FIXES.md:188-205`).
   Here unparseable/incomplete envelopes land in a quarantine directory with
@@ -55,6 +55,10 @@ from neo4j_to_clickhouse_spark.operators.ingest import (
     node_events_from_raw,
     relationship_events_from_raw,
 )
+from neo4j_to_clickhouse_spark.operators.txn_store import (
+    TxnLogPartitionStore,
+    stage_batch_files,
+)
 from neo4j_to_clickhouse_spark.sources.envelopes import parse_envelopes
 
 
@@ -62,26 +66,19 @@ from neo4j_to_clickhouse_spark.sources.envelopes import parse_envelopes
 class StreamConfig:
     """Sink layout + cadence for one entity-kind stream.
 
-    ``store``: pass a
+    ``store``: the
     :class:`~neo4j_to_clickhouse_spark.operators.txn_store.TxnLogPartitionStore`
-    to publish each micro-batch as ONE atomic transaction-log commit —
-    concurrent readers then never see a partially-promoted batch (the
-    rename protocol's one remaining gap) and batch replay is an atomic
-    replace. This is the RECOMMENDED sink protocol. Default ``None``
-    resolves per-table, like the maintenance jobs
-    (:func:`~neo4j_to_clickhouse_spark.operators.maintenance.resolve_store`):
-    a ``_txn_log``-adopted table transacts automatically (rename-promoting
-    into a logged table would land files the snapshot never sees), a
-    plain table keeps the rename protocol. The quarantine sink always
-    uses renames: it is an append-only audit log, not a snapshot-read
-    table."""
+    that publishes each micro-batch as ONE atomic transaction-log commit;
+    ``None`` means a plain ``TxnLogPartitionStore()``. The quarantine
+    sink always uses renames: it is an append-only audit log, not a
+    snapshot-read table."""
 
     table_path: str
     quarantine_path: str
     checkpoint_path: str
     processing_time: str | None = "1 second"  # None -> availableNow drain
     coalesce_output: int | None = None  # small-file control per micro-batch
-    store: object | None = None  # duck-typed: needs .commit_batch
+    store: TxnLogPartitionStore | None = None
 
 
 def dedup_within_watermark(
@@ -93,7 +90,7 @@ def dedup_within_watermark(
     """In-flight guard against upstream PRODUCER duplicates (the same
     event id emitted twice by the source, possibly in different
     micro-batches) — the failure mode the sink's replay-idempotent
-    rename protocol cannot see, because both copies are legitimate new
+    batch commit cannot see, because both copies are legitimate new
     data to the sink.
 
     ``dropDuplicatesWithinWatermark`` keeps one row per id while the id
@@ -110,7 +107,8 @@ def dedup_within_watermark(
 def _promote_staged(
     staging: str, dest_root: str, batch_id: int, query_name: str = ""
 ) -> None:
-    """Move staged part-files into the table under deterministic
+    """Move staged part-files into a plain (unlogged) append-only
+    directory — the quarantine sink — under deterministic
     ``batch-[<query>~]<id>-<i>`` names. Replay-safe: files from a
     previous (crashed) attempt of the same batch are removed first, so
     re-running a batch replaces its own output rather than duplicating
@@ -153,7 +151,8 @@ def _write_batch(
     """Sink one micro-batch: events to the month-partitioned table, bad rows
     to quarantine — idempotently (see module docstring). Runs on the driver
     per micro-batch (foreachBatch); the staged writes happen on executors,
-    the promote is a driver-side batch of atomic renames."""
+    the publish is a driver-side batch of atomic renames plus one log
+    commit."""
     import os
 
     events = result.events
@@ -172,27 +171,15 @@ def _write_batch(
         .partitionBy("event_month")
         .parquet(staging)
     )
-    store = config.store
-    if store is None:
-        from neo4j_to_clickhouse_spark.operators.maintenance import (
-            resolve_store,
-        )
-
-        store = resolve_store(config.table_path)
-    if hasattr(store, "commit_batch"):
-        from neo4j_to_clickhouse_spark.operators.txn_store import (
-            stage_batch_files,
-        )
-
-        # the query name namespaces the batch tag: two queries writing
-        # the same table share batch-id sequences, and an un-namespaced
-        # replay of one would remove the other's committed batch-N files
-        adds, tag = stage_batch_files(
-            config.table_path, staging, batch_id, query_name=query_name
-        )
-        store.commit_batch(config.table_path, adds, tag)
-    else:
-        _promote_staged(staging, config.table_path, batch_id, query_name)
+    # the query name namespaces the batch tag: two queries writing the
+    # same table share batch-id sequences, and an un-namespaced replay of
+    # one would remove the other's committed batch-N files
+    adds, tag = stage_batch_files(
+        config.table_path, staging, batch_id, query_name=query_name
+    )
+    (config.store or TxnLogPartitionStore()).commit_batch(
+        config.table_path, adds, tag
+    )
 
     bad = result.quarantine
     if config.coalesce_output:

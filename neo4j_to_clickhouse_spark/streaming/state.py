@@ -92,7 +92,7 @@ def start_latest_state_stream(
     state at any moment.
 
     The changelog write uses the same staged-rename idempotency as the
-    ingest sink (:func:`..pipeline._promote_staged`): a micro-batch
+    quarantine sink (:func:`..pipeline._promote_staged`): a micro-batch
     replayed after a crash replaces its own output. (Consumers going
     through ``latest_events`` would collapse duplicates anyway — this
     keeps the raw changelog itself exactly-once.)"""

@@ -14,6 +14,10 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+# the session default heap (48g) exceeds a 16 GB host's memory: over a full
+# run the driver JVM's RSS grew past 14 GB and the kernel OOM-killed it; the
+# test fixtures are tiny, and the whole suite passes within a 6g heap
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 from neo4j_to_clickhouse_spark.session import get_spark  # noqa: E402
 

@@ -12,10 +12,7 @@ from neo4j_to_clickhouse_spark.operators.ingest import (
     node_events_from_raw,
     relationship_events_from_raw,
 )
-from neo4j_to_clickhouse_spark.sources.bucketed import (
-    read_table,
-    write_bucketed_events,
-)
+from neo4j_to_clickhouse_spark.sources.bucketed import write_bucketed_events
 
 
 @pytest.fixture(scope="module")
@@ -38,8 +35,8 @@ def bucketed_tables(spark, node_raw, rel_raw, tmp_path_factory):
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
     nodes_t, rels_t = bucketed_tables
-    nodes = read_table(spark, nodes_t).select("entity_id", "labels")
-    rels = read_table(spark, rels_t).select(
+    nodes = spark.table(nodes_t).select("entity_id", "labels")
+    rels = spark.table(rels_t).select(
         "entity_id", "relationship_type", "target_id"
     )
     # hint("merge"): at test size the planner would broadcast (which
@@ -58,7 +55,7 @@ def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
 def test_bucketed_aggregation_has_no_exchange(spark, bucketed_tables):
     nodes_t, _ = bucketed_tables
     agg = (
-        read_table(spark, nodes_t)
+        spark.table(nodes_t)
         .groupBy("entity_id")
         .agg(F.count("*").alias("n"))
     )

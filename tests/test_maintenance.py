@@ -17,6 +17,11 @@ from neo4j_to_clickhouse_spark.operators.maintenance import (
     compact,
     retention_months,
 )
+from neo4j_to_clickhouse_spark.operators.txn_store import (
+    history,
+    read_table,
+    snapshot,
+)
 from neo4j_to_clickhouse_spark.sources.snapshot import (
     load_node_snapshot,
     write_events,
@@ -48,7 +53,7 @@ def test_write_events_layout(spark, event_table):
 
 def test_compact_latest_keeps_one_row_per_entity(spark, event_table):
     compact(spark, event_table, keep="latest")
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     # 3 entities -> 3 rows; entity 1's survivor is the event_id tie-break
     # winner at the duplicated millisecond timestamp
     assert df.count() == 3
@@ -58,7 +63,7 @@ def test_compact_latest_keeps_one_row_per_entity(spark, event_table):
 
 def test_compact_events_drops_replayed_ids_only(spark, event_table):
     compact(spark, event_table, keep="events")
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     assert df.count() == 6  # 7 - 1 replayed duplicate
     assert df.select("event_id").distinct().count() == 6
 
@@ -72,7 +77,7 @@ def test_compact_only_touches_requested_months(spark, event_table):
     compact(spark, event_table, months=["202603"], keep="events")
     after_2602 = sorted(os.listdir(os.path.join(event_table, "event_month=202602")))
     assert after_2602 == before["event_month=202602"]  # untouched files
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     assert df.filter("event_month = '202602'").count() == 4
     assert df.filter("event_month = '202603'").count() == 2  # dup dropped
 
@@ -109,43 +114,6 @@ def test_table_stats_reports_per_month(spark, event_table):
     )
 
 
-def test_swap_recovery_rolls_back_and_forward(spark, event_table):
-    """A crash at any step of the partition swap must be recoverable: an
-    aside copy with no live dir rolls BACK; an aside copy alongside a live
-    dir rolls FORWARD; a bare marker is consistent already."""
-    import shutil
-    from pathlib import Path
-
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        LocalPartitionStore,
-    )
-
-    root = Path(event_table)
-    store = LocalPartitionStore()
-    n_before = spark.read.parquet(event_table).count()
-
-    # crash between steps 2 and 3: live renamed aside, new never arrived
-    (root / "event_month=202602").rename(root / ".old_202602")
-    (root / ".swap_202602").touch()
-    assert store.recover(event_table) == ["202602"]
-    assert (root / "event_month=202602").is_dir()
-    assert not (root / ".old_202602").exists()
-    assert spark.read.parquet(event_table).count() == n_before
-
-    # crash after step 3: new data live, aside not yet deleted
-    shutil.copytree(root / "event_month=202603", root / ".old_202603")
-    (root / ".swap_202603").touch()
-    assert store.recover(event_table) == ["202603"]
-    assert not (root / ".old_202603").exists()
-    assert spark.read.parquet(event_table).count() == n_before
-
-    # bare marker (crash before anything moved): just cleaned up
-    (root / ".swap_202602").touch()
-    assert store.recover(event_table) == ["202602"]
-    assert spark.read.parquet(event_table).count() == n_before
-    assert store.recover(event_table) == []
-
-
 def test_retention_month_arithmetic():
     assert retention_months("202604", days=90) == "202601"
     assert retention_months("202602", days=90) == "202511"
@@ -155,7 +123,7 @@ def test_retention_month_arithmetic():
 def test_apply_retention_drops_old_months(spark, event_table):
     dropped = apply_retention(spark, event_table, cutoff_month="202603")
     assert dropped == ["202602"]
-    df = spark.read.parquet(event_table)
+    df = read_table(spark, event_table)
     assert df.select("event_month").distinct().collect()[0][0] == "202603"
 
 
@@ -210,10 +178,28 @@ def test_compact_removes_stale_rows_across_months(spark, tmp_path):
     path = str(tmp_path / "t")
     write_events(df, path)
     compact(spark, path, keep="latest")
-    out = spark.read.parquet(path).collect()
+    out = read_table(spark, path).collect()
     assert len(out) == 1
     assert out[0].event_id == "e2"
-    assert not os.path.isdir(os.path.join(path, "event_month=202602"))
+    # the superseded 202602 file stays on disk until vacuum, out of the
+    # live snapshot
+    assert not any(f.startswith("event_month=202602/") for f in snapshot(path)[1])
+
+
+def test_compact_adopts_plain_table_into_log(spark, node_raw, tmp_path):
+    """compact() with no store on a table some other job wrote as plain
+    partitioned parquet adopts it: its files become version 0 and the
+    swap is version 1 of a new _txn_log."""
+    path = str(tmp_path / "plain")
+    (
+        node_events_from_raw(node_raw)
+        .events.write.partitionBy("event_month")
+        .parquet(path)
+    )
+    compact(spark, path, keep="latest")
+    assert os.path.isdir(os.path.join(path, "_txn_log"))
+    assert [h["op"] for h in history(path)] == ["init", "replace_months"]
+    assert read_table(spark, path).count() == 3
 
 
 def test_events_in_range_prunes_month_partitions(spark, event_table):
@@ -273,22 +259,6 @@ def test_initial_load_bootstrap(spark, tmp_path):
     # SNAPSHOT rows are first-class events for the views
     live = current_state(spark.read.parquet(str(tmp_path / "node_events")))
     assert live.count() == 3
-
-
-def test_delta_store_gated_with_clear_error(spark):
-    """Without delta-spark the transactional store must fail at
-    CONSTRUCTION with an actionable message, not at first use."""
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        DeltaPartitionStore,
-    )
-
-    try:
-        import delta  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="delta-spark"):
-            DeltaPartitionStore(spark)
-    else:  # environment has delta: construction succeeds
-        DeltaPartitionStore(spark)
 
 
 def test_distinct_sketches_merge_across_months(spark, event_table):

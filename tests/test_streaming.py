@@ -76,6 +76,7 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     write and checkpoint commit) must REPLACE its own output, not append a
     duplicate — raw-table consumers see each event exactly once."""
     from neo4j_to_clickhouse_spark.operators.ingest import node_events_from_raw
+    from neo4j_to_clickhouse_spark.operators.txn_store import read_table
     from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
 
     raw = spark.createDataFrame([(s,) for s in NODE_ENVELOPES], ["raw"])
@@ -86,8 +87,9 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
         coalesce_output=1,
     )
     _write_batch(node_events_from_raw(raw), config, batch_id=7)
-    n1 = spark.read.parquet(config.table_path).count()
-    # plant a stale partial file from a "crashed" earlier attempt
+    n1 = read_table(spark, config.table_path).count()
+    # plant a stale partial file from a "crashed" earlier attempt: moved
+    # into the table, never committed, so snapshot readers never see it
     import shutil
 
     month_dir = tmp_path / "events" / "event_month=202602"
@@ -95,11 +97,11 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     shutil.copy(part, month_dir / "batch-000000007-99999.parquet")
     # full replay of the same batch
     _write_batch(node_events_from_raw(raw), config, batch_id=7)
-    assert spark.read.parquet(config.table_path).count() == n1
+    assert read_table(spark, config.table_path).count() == n1
     assert spark.read.parquet(config.quarantine_path).count() == 1
     # a DIFFERENT batch id appends (it is new data, not a replay)
     _write_batch(node_events_from_raw(raw), config, batch_id=8)
-    assert spark.read.parquet(config.table_path).count() == 2 * n1
+    assert read_table(spark, config.table_path).count() == 2 * n1
 
 
 def test_latest_state_over_streamed_table(spark, streamed_nodes):

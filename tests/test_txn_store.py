@@ -1,8 +1,8 @@
 """Transaction-logged partition store (operators/txn_store.py): atomic
 versioned commits over plain Parquet — snapshot isolation (no
 reader-visible gap during swaps), time travel, optimistic concurrency
-with disjoint-month rebase, logical retention + vacuum, and crash
-behavior (orphans invisible, recover a no-op).
+with disjoint-month rebase, logical retention + vacuum, crash behavior
+(orphans invisible), and appends by ``write_events`` to a logged table.
 """
 
 from __future__ import annotations
@@ -32,14 +32,15 @@ from neo4j_to_clickhouse_spark.sources.snapshot import write_events
 @pytest.fixture()
 def event_table(spark, node_raw, tmp_path):
     """Same corpus as test_maintenance: 7 good events (one replayed
-    duplicate id) over months 202602/202603, plain partitioned Parquet."""
+    duplicate id) over months 202602/202603; write_events logs the load
+    as version 0."""
     path = str(tmp_path / "events")
     write_events(node_events_from_raw(node_raw).events, path)
     return path
 
 
 def test_bootstrap_matches_plain_read(spark, event_table):
-    """ensure_log() adopts an existing plain table as version 0; the
+    """The first load is version 0 (ensure_log() on it is a no-op); the
     snapshot read returns exactly the directory read's rows, partition
     column included."""
     assert ensure_log(event_table) == 0
@@ -146,8 +147,7 @@ def test_retention_is_metadata_only_until_vacuum(spark, event_table):
 
 def test_crash_orphans_are_invisible_and_vacuumed(spark, event_table):
     """A crash after staged files moved but BEFORE the commit must leave
-    readers on the old version; vacuum reclaims the orphans. recover()
-    is a documented no-op."""
+    readers on the old version; vacuum reclaims the orphans."""
     store = TxnLogPartitionStore()
     ensure_log(event_table)
     staging = event_table + "_staging"
@@ -159,7 +159,6 @@ def test_crash_orphans_are_invisible_and_vacuumed(spark, event_table):
     )
     # simulate the crash: ingest happens, the commit never does
     store._ingest_staged(event_table, staging, ["202602", "202603"])
-    assert store.recover(event_table) == []
     assert read_table(spark, event_table).count() == 7  # unaffected
     deleted = vacuum(event_table, retain_versions=1, min_age_s=0)
     assert deleted  # the orphaned gen-* files
@@ -316,27 +315,17 @@ def test_table_stats_reports_snapshot_not_directory(spark, event_table):
             per_month_files.get(f.split("=", 1)[1].split("/", 1)[0], 0) + 1
         )
     assert {m: r.n_files for m, r in snap_stats.items()} == per_month_files
-    # the DEFAULT call resolves the txn store from the table's _txn_log
-    # (sticky default, VERDICT r08 item 4) and matches the snapshot view
+    # the DEFAULT call (no store) matches the snapshot view
     default_stats = {
         r.event_month: r for r in table_stats(spark, event_table).collect()
     }
     assert {m: r.n_files for m, r in default_stats.items()} == per_month_files
-    # the explicit plain-store walk still shows the physical truth: MORE
-    # files than the snapshot (old generation on disk awaiting vacuum)
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        LocalPartitionStore,
-    )
+    # the disk holds MORE files than the report: the old generation
+    # awaits vacuum, and a directory walk would count it
+    from pathlib import Path
 
-    plain_stats = {
-        r.event_month: r
-        for r in table_stats(
-            spark, event_table, store=LocalPartitionStore()
-        ).collect()
-    }
-    assert sum(r.n_files for r in plain_stats.values()) > sum(
-        r.n_files for r in snap_stats.values()
-    )
+    on_disk = list(Path(event_table).glob("event_month=*/*.parquet"))
+    assert len(on_disk) > sum(r.n_files for r in snap_stats.values())
 
 
 def test_disjoint_month_race_under_real_threads(tmp_path):
@@ -588,7 +577,8 @@ def test_stage_batch_files_bootstraps_before_renames(spark, event_table, tmp_pat
     sh.copytree(
         f"{event_table}/event_month=202602", staging / "event_month=202602"
     )
-    # table NOT bootstrapped yet — the call itself must pin v0 first
+    # a table with no log yet — the call itself must pin v0 first
+    sh.rmtree(f"{event_table}/_txn_log")
     adds, tag = stage_batch_files(event_table, str(staging), 1, "q")
     assert adds and tag == "batch-q~000000001-"
     v, files = snapshot(event_table)
@@ -656,33 +646,21 @@ def test_rename_into_live_survives_dir_removal(tmp_path):
 
 
 def test_default_store_sticks_to_adopted_table(spark, event_table):
-    """VERDICT r08 item 4: once a table is adopted by the txn store, the
-    DEFAULT maintenance path must keep using the log — a rename-swap
-    compact on a logged table would move files pinned snapshots still
-    reference. Un-adopted tables keep the plain rename protocol."""
+    """VERDICT r08 item 4: the DEFAULT maintenance path (no store
+    argument) must use the table's log — a compact that moved files
+    would break every snapshot still pinned to them."""
     from pathlib import Path
 
-    from neo4j_to_clickhouse_spark.operators.maintenance import (
-        LocalPartitionStore,
-        resolve_store,
-        table_stats,
-    )
+    from neo4j_to_clickhouse_spark.operators.maintenance import table_stats
 
-    # plain table -> plain store, and a default compact leaves no log
-    assert isinstance(resolve_store(event_table), LocalPartitionStore)
     compact(spark, event_table, keep="latest")
-    assert not (Path(event_table) / "_txn_log").exists()
-    assert spark.read.parquet(event_table).count() == 3
-
-    # one explicit adoption; every later DEFAULT call transacts
-    ensure_log(event_table)
-    assert isinstance(resolve_store(event_table), TxnLogPartitionStore)
     compact(spark, event_table, keep="events")
     ops = [h["op"] for h in history(event_table)]
-    assert ops == ["init", "replace_months"]
+    assert ops == ["init", "replace_months", "replace_months"]
     assert read_table(spark, event_table).count() == 3
+    assert read_table(spark, event_table, version=0).count() == 7
 
-    # default retention on the adopted table is a metadata-only commit
+    # default retention is a metadata-only commit
     dropped = apply_retention(spark, event_table, "202603")
     assert dropped == ["202602"]
     assert history(event_table)[-1]["op"] == "retention_drop"
@@ -695,8 +673,7 @@ def test_default_store_sticks_to_adopted_table(spark, event_table):
 
 def test_stream_default_store_transacts_on_adopted_table(spark, node_raw, tmp_path):
     """A StreamConfig with store=None writing into a txn-adopted table
-    must publish through the log (rename promotion would land files the
-    snapshot never sees)."""
+    publishes through the log with a default TxnLogPartitionStore."""
     from neo4j_to_clickhouse_spark.streaming import StreamConfig
     from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
 
@@ -1008,20 +985,27 @@ def test_int_months_still_replace(spark, event_table):
     assert read_table(spark, event_table).count() == 7
 
 
-def test_maintenance_cycle_plain_table(spark, event_table):
-    """On an un-adopted table the cycle stays on the rename protocol:
-    no log appears, no vacuum runs, results match a direct compact."""
+def test_maintenance_cycle_plain_table(spark, event_table, tmp_path):
+    """On a table another job wrote as plain partitioned parquet (no
+    log), the cycle adopts it: the files become version 0, the compact
+    is a commit on top, and the default vacuum age guard spares the
+    just-superseded generation."""
     from pathlib import Path
 
     from neo4j_to_clickhouse_spark.operators.maintenance import (
         maintenance_cycle,
     )
 
-    report = maintenance_cycle(spark, event_table, keep="events")
+    plain = str(tmp_path / "plain")
+    read_table(spark, event_table).write.partitionBy("event_month").parquet(
+        plain
+    )
+    report = maintenance_cycle(spark, plain, keep="events")
     assert report["vacuumed_files"] == 0
     assert report["compacted_months"] == ["202602", "202603"]
-    assert not (Path(event_table) / "_txn_log").exists()
-    assert spark.read.parquet(event_table).count() == 6  # replay dup gone
+    assert (Path(plain) / "_txn_log").is_dir()
+    assert [h["op"] for h in history(plain)] == ["init", "replace_months"]
+    assert read_table(spark, plain).count() == 6  # replay dup gone
 
 
 def test_concurrent_vacuums_under_threads(tmp_path):
@@ -1082,11 +1066,11 @@ def test_concurrent_vacuums_under_threads(tmp_path):
 
 
 def test_two_queries_share_plain_table_and_quarantine(spark, node_raw, tmp_path):
-    """r09 self-review: the RENAME protocol (plain tables + the
-    always-rename quarantine sink) must namespace batch files and
-    staging dirs by query exactly like the txn path — two queries share
-    batch-id sequences, and an un-namespaced promote of one would
-    delete the other's committed batch-N files."""
+    """With the DEFAULT store, both the event table's batch commit and
+    the always-rename quarantine sink must namespace batch files and
+    staging dirs by query — two queries share batch-id sequences, and an
+    un-namespaced replay of one would delete the other's committed
+    batch-N files."""
     from neo4j_to_clickhouse_spark.streaming import StreamConfig
     from neo4j_to_clickhouse_spark.streaming.pipeline import _write_batch
 
@@ -1098,18 +1082,18 @@ def test_two_queries_share_plain_table_and_quarantine(spark, node_raw, tmp_path)
     )
     res = node_events_from_raw(node_raw)
     _write_batch(res, config, batch_id=7, query_name="qA")
-    n1 = spark.read.parquet(config.table_path).count()
+    n1 = read_table(spark, config.table_path).count()
     nq1 = spark.read.parquet(config.quarantine_path).count()
     assert n1 == 7 and nq1 == 1
 
     # qB's batch 7 is different data: appends in BOTH sinks
     _write_batch(res, config, batch_id=7, query_name="qB")
-    assert spark.read.parquet(config.table_path).count() == 2 * n1
+    assert read_table(spark, config.table_path).count() == 2 * n1
     assert spark.read.parquet(config.quarantine_path).count() == 2 * nq1
 
     # replaying qA's batch 7 replaces only qA's generation in both
     _write_batch(res, config, batch_id=7, query_name="qA")
-    assert spark.read.parquet(config.table_path).count() == 2 * n1
+    assert read_table(spark, config.table_path).count() == 2 * n1
     assert spark.read.parquet(config.quarantine_path).count() == 2 * nq1
 
 
@@ -1234,3 +1218,58 @@ def test_stream_vs_compact_race_under_threads(spark, tmp_path):
     final = read_table(spark, table)
     ids = sorted(r.event_id for r in final.collect())
     assert ids == sorted(["seed-0"] + [f"b{b}" for b in range(n_batches)])
+
+
+def test_write_events_append_to_compacted_table_is_committed(
+    spark, node_raw, event_table
+):
+    """An append by write_events to a table that already has a log (here
+    after a compaction) must publish as a commit: read_table sees every
+    row, and vacuum keeps the appended files. Plain files dropped beside
+    the log would be invisible to snapshots and reclaimed as orphans."""
+    from pathlib import Path
+
+    compact(spark, event_table, keep="latest")
+    write_events(node_events_from_raw(node_raw).events, event_table)
+    assert read_table(spark, event_table).count() == 3 + 7
+    assert history(event_table)[-1]["op"] == "stream_batch"
+    appended = set(snapshot(event_table)[1]) - set(snapshot(event_table, 1)[1])
+    assert appended
+
+    vacuum(event_table, retain_versions=1, min_age_s=0)
+    assert all((Path(event_table) / f).is_file() for f in appended)
+    assert read_table(spark, event_table).count() == 3 + 7
+
+
+def test_compact_reaps_stale_append_staging(spark, event_table):
+    """A write_events append that died mid-write leaves its dot-prefixed
+    staging dir behind; compact's age-based reaper sweeps it like a
+    crashed compaction's, so the copy does not leak forever."""
+    import os
+    import time
+    from pathlib import Path
+
+    stale = Path(event_table) / ".write-0123456789ab"
+    (stale / "event_month=202602").mkdir(parents=True)
+    past = time.time() - 7200
+    os.utime(stale, (past, past))
+    compact(spark, event_table, keep="latest")
+    assert not stale.exists()
+
+
+def test_write_events_refuses_uri_paths(
+    spark, node_raw, tmp_path, monkeypatch
+):
+    """The log is local-filesystem only: pathlib would turn s3a://b/t into
+    a local ./s3a:/b/t log that never sees the remotely written files,
+    and later appends would vanish into an uncommitted staging dir. A
+    URI is refused before anything is written, locally or remotely."""
+    monkeypatch.chdir(tmp_path)
+    events = node_events_from_raw(node_raw).events
+    for uri in ("s3a://bucket/t", "hdfs://nn/t", f"file://{tmp_path}/t"):
+        with pytest.raises(ValueError, match="local filesystem only"):
+            write_events(events, uri)
+        with pytest.raises(ValueError, match="local filesystem only"):
+            ensure_log(uri)
+    assert list(tmp_path.iterdir()) == []
+
